@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -192,50 +193,53 @@ METRICS_SCHEMA = (
 )
 
 
-def build_metrics(docs: DataFrame, findings: DataFrame, run_id: str) -> DataFrame:
-    """Per-partition lineage metrics: docs scanned/kept, drop reasons map,
-    PII hits by category map.
+def build_metrics(docs: DataFrame, run_id: str) -> tuple[DataFrame, int]:
+    """Per-partition metrics of one run's docs re-read — docs scanned/kept,
+    drop reasons map, PII hits by category map — and the run's docs total.
 
-    The per-partition counters are metadata-sized (partitions × reasons /
-    categories), so the maps are assembled driver-side from two flat
-    partial-aggregated collects — one narrow aggregation job each — instead
-    of a groupBy→groupBy→join plan whose scheduling latency dominated the
-    pipeline's serial tail.
+    One grouped collect: a docs branch unioned with an exploded branch of
+    the ``findings`` array, both keyed by ``spark_partition_id()`` of the
+    same re-read, so a row's ``pii_hits`` count the findings of exactly the
+    docs its ``docs_scanned`` counts. The maps are folded driver-side and
+    the rows return through Arrow (no Python worker, no pickled RDD).
     """
-    spark = docs.sparkSession
-    doc_rows = (
-        docs.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid", "keep", "drop_reason")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    hit_rows = (
-        findings.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid", "pii_type")
-        .agg(F.count(F.lit(1)).alias("n"))
+    part = F.spark_partition_id().alias("_pid")
+    null = F.lit(None).cast("string")
+    counts = (
+        docs.select(part, "keep", "drop_reason", null.alias("pii_type"))
+        .unionByName(
+            docs.select(
+                part,
+                F.lit(None).cast("boolean").alias("keep"),
+                null.alias("drop_reason"),
+                F.explode("findings.pii_type").alias("pii_type"),
+            )
+        )
+        .groupBy("_pid", "keep", "drop_reason", "pii_type")
+        .count()
+        # bounded: <= partitions x (1 + drop reasons + PII types) rows,
+        # independent of the doc count
         .collect()
     )
     agg: dict[int, dict] = {}
-    for r in doc_rows:
+    for r in counts:
         m = agg.setdefault(
             r["_pid"],
             {"docs_scanned": 0, "docs_kept": 0, "drop_reasons": {}, "pii_hits": {}},
         )
-        m["docs_scanned"] += r["n"]
+        if r["pii_type"] is not None:
+            m["pii_hits"][r["pii_type"]] = r["count"]
+            continue
+        m["docs_scanned"] += r["count"]
         if r["keep"]:
-            m["docs_kept"] += r["n"]
+            m["docs_kept"] += r["count"]
         if r["drop_reason"] is not None:
-            m["drop_reasons"][r["drop_reason"]] = (
-                m["drop_reasons"].get(r["drop_reason"], 0) + r["n"]
-            )
-    for r in hit_rows:
-        m = agg.setdefault(
-            r["_pid"],
-            {"docs_scanned": 0, "docs_kept": 0, "drop_reasons": {}, "pii_hits": {}},
-        )
-        m["pii_hits"][r["pii_type"]] = m["pii_hits"].get(r["pii_type"], 0) + r["n"]
-    rows = [
-        (pid, m["docs_scanned"], m["docs_kept"], m["drop_reasons"], m["pii_hits"], run_id)
-        for pid, m in sorted(agg.items())
-    ]
-    return spark.createDataFrame(rows, schema=METRICS_SCHEMA)
+            reasons = m["drop_reasons"]
+            reasons[r["drop_reason"]] = reasons.get(r["drop_reason"], 0) + r["count"]
+    rows = pd.DataFrame(
+        [{"partition_id": pid, **m, "run_id": run_id} for pid, m in sorted(agg.items())],
+        columns=["partition_id", "docs_scanned", "docs_kept", "drop_reasons",
+                 "pii_hits", "run_id"],
+    )
+    spark = docs.sparkSession
+    return spark.createDataFrame(rows, METRICS_SCHEMA), int(rows["docs_scanned"].sum())

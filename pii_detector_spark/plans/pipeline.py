@@ -19,7 +19,7 @@ Stage order and the reasoning at 100 TB:
                             version. Output coalesced to ~4 files/core so
                             the driver-serial commit never dominates.
 
-The only wide exchanges in the job are the metrics aggregations over the
+The only wide exchange in the job is the one metrics aggregation over the
 (tiny) per-partition counters.
 """
 
@@ -327,15 +327,9 @@ def write_run_outputs(
         for f in futs:
             f.result()
 
-    all_findings = spark.read.schema(findings.schema).parquet(
-        findings_path
-    ).filter(
-        F.col("run_id") == run_id
-    )
-    # build_metrics materializes the (tiny) counters driver-side; reuse them
-    # for docs_written instead of a separate count() scan of the docs output
-    metrics_df = checkpoint.build_metrics(this_run, all_findings, run_id)
-    metrics_rows = metrics_df.collect()
+    # one aggregation over the docs re-read; its driver-side rows also give
+    # docs_written, so the docs output needs no separate count() scan
+    metrics_df, n_docs = checkpoint.build_metrics(this_run, run_id)
     metrics_df.write.mode("append").partitionBy("run_id").parquet(
         checkpoint.metrics_path(output_dir)
     )
@@ -347,7 +341,7 @@ def write_run_outputs(
     from pii_detector_spark.plans.snapshots import commit_run_snapshot
 
     commit_run_snapshot(output_dir, run_id)
-    return sum(r["docs_scanned"] for r in metrics_rows)
+    return n_docs
 
 
 def _sig_ddl(num_hashes: int) -> str:

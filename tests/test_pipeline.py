@@ -115,6 +115,90 @@ def test_metrics_totals(spark, pipeline_out, engine_rows):
     assert agg[1] == sum(1 for r in engine_rows.values() if r["keep"])
 
 
+def test_metrics_consistent_with_docs_and_findings(spark, pipeline_out, engine_rows):
+    """One run's metrics rows against its docs and findings tables: hit
+    counts per PII type, drop-reason counts, kept docs, and one row per
+    partition_id."""
+    from collections import Counter
+
+    rows = (
+        spark.read.parquet(pipeline_out.metrics_path)
+        .filter("run_id = 't1'")
+        .collect()
+    )
+    hits: Counter = Counter()
+    reasons: Counter = Counter()
+    for r in rows:
+        hits.update(r["pii_hits"])
+        reasons.update(r["drop_reasons"])
+    findings = spark.read.parquet(pipeline_out.findings_path).filter("run_id = 't1'")
+    assert hits == Counter({
+        r["pii_type"]: r["count"]
+        for r in findings.groupBy("pii_type").count().collect()
+    })
+    assert sum(hits.values()) > 0
+    assert reasons == Counter(
+        r["drop_reason"] for r in engine_rows.values() if r["drop_reason"]
+    )
+    assert sum(r["docs_kept"] for r in rows) == sum(
+        1 for r in engine_rows.values() if r["keep"]
+    )
+    pids = [r["partition_id"] for r in rows]
+    assert len(pids) == len(set(pids))
+
+
+def _last_job_id(sc) -> int:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_metrics_sink_jobs_and_arrow_path(spark, tmp_path_factory, monkeypatch):
+    """The metrics tail (build_metrics + the metrics write) costs at most 3
+    Spark jobs, with the Arrow fallback off so a silent fall back to the
+    pickled-rows path fails here; an empty rerun still commits with no
+    metrics files."""
+    import glob
+
+    import pii_detector_spark.plans.pipeline as pipemod
+    from pii_detector_spark.plans import checkpoint
+    from pii_detector_spark.sources.datagen import write_web_pages
+
+    src = tmp_path_factory.mktemp("jobs_src") / "pages.parquet"
+    write_web_pages(str(src), n_rows=120, seed=7)
+    out = str(tmp_path_factory.mktemp("jobs_out"))
+    sc = spark.sparkContext
+    seen = {}
+    build_metrics = checkpoint.build_metrics
+    mark = pipemod.mark_run_committed
+
+    def spy_build(*a, **k):
+        seen["start"] = _last_job_id(sc)
+        return build_metrics(*a, **k)
+
+    def spy_mark(*a, **k):
+        seen["end"] = _last_job_id(sc)
+        return mark(*a, **k)
+
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        monkeypatch.setattr(checkpoint, "build_metrics", spy_build)
+        monkeypatch.setattr(pipemod, "mark_run_committed", spy_mark)
+        res = run_pipeline(spark, str(src), out, run_id="j1")
+        assert res.docs_written > 0
+        assert 0 < seen["end"] - seen["start"] <= 3, seen
+        empty = run_pipeline(spark, str(src), out, run_id="j2")
+    finally:
+        spark.conf.set(key, prev)
+    assert empty.docs_written == 0
+    assert pipemod.run_committed(out, "j2")
+    assert not glob.glob(os.path.join(res.metrics_path, "run_id=j2", "*.parquet"))
+    m = spark.read.parquet(res.metrics_path)
+    assert m.groupBy().sum("docs_scanned").collect()[0][0] == res.docs_written
+
+
 def test_every_drop_reason_class_present(engine_rows):
     reasons = {r["drop_reason"] for r in engine_rows.values() if r["drop_reason"]}
     expected = {
